@@ -32,6 +32,7 @@ from distcpplus_spark.plans.copy_plan import (
     apply_limits,
     assign_cost_buckets,
     check_duplicates_and_total,
+    num_cost_buckets,
     plan_mirror_delete,
     plan_updates,
 )
@@ -61,6 +62,9 @@ class CopyPlan:
     # alone undercounts them. None for rehydrated plans (load_plan),
     # where the source listing was not persisted.
     src_files: DataFrame | None = None
+    # copy-task count (``copies.bucket`` lies in [0, num_buckets)).
+    # None for rehydrated plans: the copier then reads max(bucket).
+    num_buckets: int | None = None
 
     def explain(self) -> None:
         self.copies.explain("formatted")
@@ -225,28 +229,23 @@ class DistCpPlusEngine:
             src_meta = apply_limits(src_meta, opts.file_limit, opts.size_limit)
 
         dst_is_dir = os.path.isdir(dst_root)
-        if dst_is_dir:
-            # dst listing is relative to the dst root itself (no
-            # basename prefix) so relative_dst keys line up with src's
-            dst_meta = list_tree(
+        # dst listing is relative to the dst root itself (no basename
+        # prefix) so relative_dst keys line up with src's; a missing dst
+        # is an empty manifest, which Catalyst folds out of the join
+        dst_meta = (
+            list_tree(
                 self.spark, [dst_root], include_roots=False, prefix_base=False
             )
-        else:
-            # one-slice empty relation: createDataFrame([]) still
-            # parallelizes into defaultParallelism Python-evaluated
-            # slices, each a worker round trip per downstream join
-            dst_meta = self.spark.createDataFrame(
-                self.spark.sparkContext.parallelize([], numSlices=1),
-                src_meta.schema,
-            )
+            if dst_is_dir
+            else src_all.limit(0)
+        )
 
-        # round-15 job consolidation (guide §2.6 / §5): the update-join
-        # plan is lazily checkpointed, then ONE job runs the
-        # duplicate-destination check and the cost total together and
-        # materializes it — previously the dup check, the bucket-total
-        # agg, the prefix-sum's range sampling and its bucket stamping
-        # each re-evaluated the join (and its checksum UDF) from
-        # scratch as separate jobs.
+        # Both manifests are materialized (list_tree's list-once
+        # contract), so every consumer below reads them without a
+        # re-scan. The duplicate check runs first, before any -update
+        # checksum reads a file; the cost total then materializes the
+        # lazily checkpointed update-join plan once for the bucket
+        # stamping and the copy.
         copies = plan_updates(src_meta, dst_meta, opts).localCheckpoint(
             eager=False
         )
@@ -266,6 +265,9 @@ class DistCpPlusEngine:
             dst_root=dst_root,
             run_id=uuid.uuid4().hex[:12],
             src_files=src_meta.filter(~F.col("is_dir")).select("relative_dst"),
+            num_buckets=num_cost_buckets(
+                total_cost, opts.bytes_per_task, opts.max_tasks
+            ),
         )
 
     def execute(self, plan: CopyPlan, copy_fn=None) -> DataFrame:
@@ -304,6 +306,7 @@ class DistCpPlusEngine:
                     plan.run_id,
                     preserve=plan.opts.preserve,
                     copy_fn=copy_fn,
+                    num_buckets=plan.num_buckets,
                 )
             result = result.observe(
                 obs,

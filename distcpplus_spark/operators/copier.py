@@ -240,11 +240,13 @@ def execute_copy(
     copy_fn: Callable | None = None,
     num_buckets: int | None = None,
 ) -> DataFrame:
-    """Run the copy: repartition by cost bucket → mapPartitions(copy).
+    """Run the copy: cost bucket b → task b → mapPartitions(copy).
 
     Returns the result DataFrame (one row per plan row) — the engine's
     counters (O15) are aggregations over it. ``copy_fn`` swaps the
     copy implementation (pluggable-mapper surface, O18).
+    ``num_buckets`` is the plan's bucket count; without it (a
+    rehydrated plan) one job reads ``max(bucket)``.
     """
     spark = plan.sparkSession
     tmp_root = os.path.join(dst_root, f"_distcp_tmp_{run_id}")
@@ -252,9 +254,11 @@ def execute_copy(
 
     if "bucket" in plan.columns:
         n = num_buckets or (plan.agg(F.max("bucket")).collect()[0][0] or 0) + 1
-        # mkdir rows must run before file rows within a partition;
+        # bucket b IS partition b: hashing buckets into n partitions
+        # lets two buckets collide and one task copy both. mkdir rows
+        # must run before file rows within a partition;
         # sortWithinPartitions puts dirs first (paths sort parent<child)
-        work = plan.repartition(n, "bucket").sortWithinPartitions(
+        work = plan.repartitionById(n, "bucket").sortWithinPartitions(
             F.desc("is_dir"), F.asc("path")
         )
     else:

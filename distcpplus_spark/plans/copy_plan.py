@@ -57,7 +57,10 @@ class CopyOptions:
 def check_duplicates(src_meta: DataFrame) -> None:
     """Duplicate-destination check (DistCpUtils.java:84-110): the
     reference external-sorts and compares neighbors; relationally it is
-    GROUP BY HAVING count>1. Eager (runs a job) — called once per plan."""
+    GROUP BY HAVING count>1. Eager (runs a job) — called once per plan,
+    on the source listing before anything reads file contents. A NULL
+    ``relative_dst`` shared by two files is a duplicate like any
+    other."""
     dups = (
         src_meta.filter(~F.col("is_dir"))
         .groupBy("relative_dst")
@@ -67,7 +70,7 @@ def check_duplicates(src_meta: DataFrame) -> None:
         .collect()
     )
     if dups:
-        names = ", ".join(r["relative_dst"] for r in dups)
+        names = ", ".join(str(r["relative_dst"]) for r in dups)
         raise DuplicationError(f"multiple sources map to one destination: {names}")
 
 
@@ -309,10 +312,13 @@ def plan_updates(
             "action",
             F.when(F.col("s.is_dir"), F.lit("mkdir"))
             .when(missing, F.lit("copy_new"))
-            # checksum-detected: metadata ties, so the copier's cheap
-            # exec-time re-check must not veto the copy
+            # checksum-detected changes tie on metadata and -overwrite is
+            # unconditional: the copier's cheap exec-time re-check of
+            # copy_changed rows must veto neither
             .when(crc_col, F.lit("copy_checksum"))
-            .otherwise(F.lit("copy_changed")),
+            .otherwise(
+                F.lit("copy_overwrite" if opts.overwrite else "copy_changed")
+            ),
         )
         .filter(F.col("s.is_dir") | keep)
         .select("s.*", "action")
@@ -362,45 +368,26 @@ def _distributed_prefix_sums(
     )
 
 
-def check_duplicates_and_total(
-    src_meta: DataFrame, plan: DataFrame
-) -> int:
-    """The duplicate-destination check AND the plan's total copy cost
-    in ONE Spark job (round-15, guide §2.6 — overlap independent
-    work): the two subtrees union into a single action, so the
-    dup-check stage and the cost-total stage run concurrently, and —
-    because callers lazily checkpoint ``plan`` first — this job is
-    also the one that materializes the update-join plan that three
-    downstream consumers (range sampling, bucket stamping, the final
-    collect) would otherwise each recompute.
+def check_duplicates_and_total(src_meta: DataFrame, plan: DataFrame) -> int:
+    """:func:`check_duplicates` on the source listing, THEN the plan's
+    total copy cost, as two actions in that order: a duplicate
+    destination raises :class:`DuplicationError` before the plan's
+    -update checksums read any file. When ``plan`` is lazily
+    checkpointed, the total is the action that materializes it for
+    the bucket stamping and the copy. Returns ``sum(plan.cost)`` (0
+    when empty) for :func:`assign_cost_buckets`'s ``total``."""
+    check_duplicates(src_meta)
+    return int(plan.agg(F.sum("cost")).collect()[0][0] or 0)
 
-    Raises :class:`DuplicationError` exactly like
-    :func:`check_duplicates`; returns ``sum(plan.cost)`` (0 when
-    empty) for :func:`assign_cost_buckets`'s ``total``.
-    """
-    dup_rows = (
-        src_meta.filter(~F.col("is_dir"))
-        .groupBy("relative_dst")
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(5)
-        .select(
-            F.col("relative_dst").alias("_k"),
-            F.lit(None).cast("long").alias("_v"),
-        )
-    )
-    total_row = plan.agg(F.sum("cost").alias("_v")).select(
-        F.lit(None).cast("string").alias("_k"), F.col("_v")
-    )
-    stats = dup_rows.unionByName(total_row).collect()
-    dups = [r["_k"] for r in stats if r["_k"] is not None]
-    if dups:
-        names = ", ".join(dups)
-        raise DuplicationError(
-            f"multiple sources map to one destination: {names}"
-        )
-    total = next(r["_v"] for r in stats if r["_k"] is None)
-    return int(total or 0)
+
+def num_cost_buckets(
+    total: int, bytes_per_task: int, max_tasks: int | None = None
+) -> int:
+    """Copy-task count for a plan copying ``total`` bytes:
+    clamp(ceil(total / bytes_per_task), 1, max_tasks) (setMapCount,
+    DistCPPlus.java:442-451)."""
+    n = max(1, -(-total // bytes_per_task))
+    return min(n, max_tasks) if max_tasks else n
 
 
 def assign_cost_buckets(
@@ -417,21 +404,27 @@ def assign_cost_buckets(
     (_distributed_prefix_sum), not a global ordered window — at a
     100 M-row manifest the window would serialize on one task.
 
-    Returns the plan with a ``bucket`` column; the executor
-    repartitions on it. num_buckets = clamp(total/bytes_per_task,
-    1, max_tasks). ``total`` skips the sum job when the caller
-    already computed it (check_duplicates_and_total).
+    Returns the plan with a ``bucket`` column in ``[0, n)``, n =
+    :func:`num_cost_buckets`; the copier sends bucket b to task b.
+    ``total`` skips the sum job when the caller already computed it
+    (check_duplicates_and_total). A one-bucket plan needs no prefix
+    sum.
     """
     if total is None:
         total = plan.agg(F.sum("cost")).collect()[0][0] or 0
-    n = max(1, int(total // bytes_per_task) + (1 if total % bytes_per_task else 0))
-    if max_tasks:
-        n = min(n, max_tasks)
+    n = num_cost_buckets(total, bytes_per_task, max_tasks)
+    if n == 1:
+        return plan.withColumn("bucket", F.lit(0))
     target = max(1, (total + n - 1) // n)
     cum = _distributed_prefix_sum(plan, value_col="cost", out_col="_cum")
+    # zero-cost rows after the last byte (trailing dirs, empty files)
+    # start at _cum == total: clamp them into the last bucket
     return cum.withColumn(
         "bucket",
-        F.floor((F.col("_cum") - F.col("cost")) / F.lit(target)).cast("int"),
+        F.least(
+            F.floor((F.col("_cum") - F.col("cost")) / F.lit(target)),
+            F.lit(n - 1),
+        ).cast("int"),
     ).drop("_cum")
 
 
@@ -447,7 +440,7 @@ def plan_mirror_delete(dst_meta: DataFrame, src_plan: DataFrame) -> DataFrame:
     on the parent path replaces the reference's ordered scan.
     """
     doomed = dst_meta.join(
-        src_plan.select("relative_dst").distinct(), "relative_dst", "left_anti"
+        src_plan.select("relative_dst"), "relative_dst", "left_anti"
     )
     parent = F.when(
         F.instr(F.col("relative_dst"), "/") > 0,

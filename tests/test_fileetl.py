@@ -55,6 +55,71 @@ def test_list_tree_distributed_fanout(spark, tmp_path):
     assert df.filter(~F.col("is_dir")).count() == 100
 
 
+def _two_root_tree(tmp_path):
+    """Two roots, three levels, files of varied size and mode; every
+    directory read once so later listings see settled atimes."""
+    roots = []
+    for name in ("r1", "r2"):
+        root = tmp_path / name
+        for a in range(3):
+            for b in range(2):
+                d = root / f"t{a}" / f"m{b}"
+                d.mkdir(parents=True)
+                for c in range(2):
+                    f = d / f"f{c}.bin"
+                    f.write_bytes(b"x" * (a * 7 + b * 3 + c))
+                    os.chmod(f, 0o600 + c * 0o40)
+        (root / "top.txt").write_bytes(b"top")
+        roots.append(str(root))
+    for root in roots:
+        for _ in os.walk(root):
+            pass
+    return roots
+
+
+@pytest.mark.parametrize("prefix_base", [True, False])
+@pytest.mark.parametrize("include_roots", [True, False])
+def test_list_tree_driver_and_distributed_rows_identical(
+    spark, tmp_path, prefix_base, include_roots
+):
+    """Both sides of the fanout gate give the same rows on every
+    column (mtime, atime and permission included): the driver scan
+    and forced distributed waves (fanout_threshold=1), over two
+    roots."""
+    roots = _two_root_tree(tmp_path)
+
+    def rows(threshold):
+        df = list_tree(
+            spark, roots, include_roots=include_roots,
+            fanout_threshold=threshold, prefix_base=prefix_base,
+        )
+        return sorted(tuple(r) for r in df.collect())
+
+    driver = rows(1 << 20)
+    distributed = rows(1)
+    assert len(driver) == 2 * (include_roots + 3 + 6 + 12 + 1)
+    assert distributed == driver
+
+
+@pytest.mark.parametrize("fanout_threshold", [1 << 20, 1])
+def test_list_tree_is_a_snapshot(spark, tmp_path, fanout_threshold):
+    """List-once: the manifest is materialized when list_tree returns,
+    so deleting the tree does not change what it collects."""
+    import shutil
+
+    roots = _two_root_tree(tmp_path)
+    before = sorted(
+        tuple(r)
+        for r in list_tree(spark, roots, fanout_threshold=fanout_threshold)
+        .collect()
+    )
+    df = list_tree(spark, roots, fanout_threshold=fanout_threshold)
+    for root in roots:
+        shutil.rmtree(root)
+    assert sorted(tuple(r) for r in df.collect()) == before
+    assert df.filter(~F.col("is_dir")).count() == 2 * 13
+
+
 # ---------------------------------------------------------------------------
 # O3: regex selection
 # ---------------------------------------------------------------------------
@@ -121,6 +186,17 @@ def test_overwrite_recopies_everything(spark, src_tree, tmp_path):
     assert stats2["COPY"] == 5
 
 
+def test_overwrite_recopies_files_with_preserved_mtimes(spark, src_tree, tmp_path):
+    """-overwrite is unconditional: the copier's exec-time staleness
+    re-check (same size and mtime → SKIP) must not veto it, even when
+    -pt left every destination file's mtime equal to its source's."""
+    dst = str(tmp_path / "dst")
+    engine = DistCpPlusEngine(spark)
+    engine.copy([src_tree], dst, CopyOptions(preserve=frozenset("t")))
+    stats2 = engine.copy([src_tree], dst, CopyOptions(overwrite=True))
+    assert (stats2["COPY"], stats2["SKIP"]) == (5, 0)
+
+
 def test_failure_gate_and_ignore(spark, src_tree, tmp_path, monkeypatch):
     dst = str(tmp_path / "dst")
     engine = DistCpPlusEngine(spark)
@@ -168,6 +244,60 @@ def test_duplicate_destination_raises(spark, tmp_path):
         engine.plan([str(a), str(b)], str(tmp_path / "dst"))
 
 
+def _failing_checksum():
+    """Stand-in for the -update checksum UDF whose every read fails."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("string")
+    def sha(paths):
+        if paths.notna().any():
+            raise RuntimeError("tie file is unreadable")
+        return paths
+
+    return sha
+
+
+def test_duplicate_destination_raises_before_checksum_reads(
+    spark, tmp_path, monkeypatch
+):
+    """Under -update, a duplicate destination raises DuplicationError
+    even when reading a metadata-tie file would fail: the duplicate
+    check runs on the source listing before any checksum read."""
+    from distcpplus_spark.plans import copy_plan
+
+    a, b, dst = tmp_path / "srcA", tmp_path / "srcB", tmp_path / "dst"
+    for d in (a, b, dst):
+        d.mkdir()
+    (a / "same.txt").write_bytes(b"A")
+    (b / "same.txt").write_bytes(b"B")
+    (a / "tie.txt").write_bytes(b"t1")
+    (dst / "tie.txt").write_bytes(b"t2")
+    st = os.stat(a / "tie.txt")
+    os.utime(dst / "tie.txt", (st.st_atime, st.st_mtime))
+    monkeypatch.setattr(copy_plan, "_sha256_of_paths", _failing_checksum)
+    engine = DistCpPlusEngine(spark)
+    opts = CopyOptions(update=True)
+    with pytest.raises(DuplicationError):
+        engine.plan([str(a), str(b)], str(dst), opts)
+    # without the duplicate the same plan does read the tie file
+    with pytest.raises(Exception, match="tie file is unreadable"):
+        engine.plan([str(a)], str(dst), opts)
+
+
+def test_duplicate_null_relative_dst_is_caught(spark):
+    """Two files with a NULL relative_dst are duplicates too."""
+    from distcpplus_spark.plans.copy_plan import check_duplicates_and_total
+
+    src = spark.createDataFrame(
+        [("/s/a", None, False, 1), ("/s/b", None, False, 2),
+         ("/s/c", "c", False, 3)],
+        "path string, relative_dst string, is_dir boolean, cost long",
+    )
+    with pytest.raises(DuplicationError, match="None"):
+        check_duplicates_and_total(src, src)
+    assert check_duplicates_and_total(src.filter("path != '/s/b'"), src) == 6
+
+
 # ---------------------------------------------------------------------------
 # O6: limits  /  O10: cost buckets
 # ---------------------------------------------------------------------------
@@ -199,6 +329,29 @@ def test_cost_buckets_balanced(spark, tmp_path):
     assert len(per_bucket) == 4
     # every bucket within 2x of target (SURVEY.md §5 property)
     assert all(r["b"] <= 2 * 5000 for r in per_bucket)
+
+
+def test_two_bucket_plan_runs_two_copy_tasks(spark, tmp_path):
+    """Cost bucket b is copy task b: a two-bucket plan copies in two
+    tasks of equal bytes (hash partitioning sent both buckets to one
+    task)."""
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(4):
+        (src / f"f{i}.bin").write_bytes(b"x" * 1000)
+    engine = DistCpPlusEngine(spark)
+    plan = engine.plan(
+        [str(src)], str(tmp_path / "dst"), CopyOptions(bytes_per_task=2000)
+    )
+    assert plan.num_buckets == 2
+    result = engine.execute(plan)
+    per_task = sorted(
+        tuple(r)
+        for r in result.groupBy(F.spark_partition_id().alias("task"))
+        .agg(F.sum("bytes_copied"))
+        .collect()
+    )
+    assert per_task == [(0, 2000), (1, 2000)]
 
 
 # ---------------------------------------------------------------------------
